@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
-from biodata_pipeline_spark.functions.vector import dot, l2_norm
+from biodata_pipeline_spark.functions.vector import dot
 from biodata_pipeline_spark.operators.dedup import (
     SignatureStore,
     _index_component_frames,
@@ -55,15 +55,26 @@ from biodata_pipeline_spark.operators.kmeans import (
     assign_clusters_kernel,
     kmeans_fit,
 )
+from biodata_pipeline_spark.operators.bq import bq_rows
 from biodata_pipeline_spark.operators.pq import (
     PQ_ITERS,
     PQ_M,
     _minus_centroid,
+    adc_rows,
     pq_encode_kernel,
     pq_fit,
     recommended_k_sub,
+    residual_adc_rows,
+)
+from biodata_pipeline_spark.operators.scoring import (
+    cosine_rows,
+    exact_sim,
+    query_frame,
+    ranked,
+    score_rows,
 )
 from biodata_pipeline_spark.operators.similarity import SIM_ROUND
+from biodata_pipeline_spark.operators.sq import sq_rows
 
 
 def _store_doc_versions(spark, store_path: str, name: str) -> list[int]:
@@ -399,6 +410,27 @@ def recommended_scoring(
     return out
 
 
+def _sample_truth(store, queries, k, n_probe, query_id, query_emb,
+                  max_sample):
+    """(sample, truth, n_truth) for a recall walk: a deterministic
+    ``max_sample``-query slice (ordered by ``query_id`` — bounded
+    driver-side state) and its exact top-``k`` at ``n_probe``, both
+    checkpointed because every walk step reuses them."""
+    sample = (
+        queries.select(query_id, query_emb)
+        .orderBy(query_id)
+        .limit(max_sample)
+        .localCheckpoint()
+    )
+    truth = (
+        store.query(sample, k, n_probe=n_probe,
+                    query_id=query_id, query_emb=query_emb)
+        .select(query_id, store.id_col)
+        .localCheckpoint()
+    )
+    return sample, truth, truth.count()
+
+
 def measured_n_probe(
     store: "VectorIndexStore",
     queries: DataFrame,
@@ -436,29 +468,18 @@ def measured_n_probe(
         raise ValueError(f"target_recall must be in (0, 1], got {target_recall}")
     spark = queries.sparkSession
     n_cells = len(store.centroids(spark))
-    sample = (
-        queries.select(query_id, query_emb)
-        .orderBy(query_id)
-        .limit(max_sample)
-        .localCheckpoint()
+    sample, truth, n_truth = _sample_truth(
+        store, queries, k, n_cells, query_id, query_emb, max_sample
     )
-    truth = (
-        store.query(sample, k, n_probe=n_cells,
-                    query_id=query_id, query_emb=query_emb)
-        .select(query_id, store.id_col)
-        .localCheckpoint()  # reused once per sweep step
-    )
-    n_truth = truth.count()
     if n_truth == 0:
         return (1, 1.0) if with_recall else 1
     n_probe = 1
     while n_probe < n_cells:
         got = store.query(sample, k, n_probe=n_probe,
                           query_id=query_id, query_emb=query_emb)
-        hits = truth.join(
+        recall = truth.join(
             got.select(query_id, store.id_col), [query_id, store.id_col]
-        ).count()
-        recall = hits / n_truth
+        ).count() / n_truth
         if recall >= target_recall:
             return (n_probe, recall) if with_recall else n_probe
         n_probe = min(n_probe * 2, n_cells)
@@ -542,19 +563,9 @@ def measured_refine(
         )
     if not 0.0 < target_recall <= 1.0:
         raise ValueError(f"target_recall must be in (0, 1], got {target_recall}")
-    sample = (
-        queries.select(query_id, query_emb)
-        .orderBy(query_id)
-        .limit(max_sample)
-        .localCheckpoint()
+    sample, truth, n_truth = _sample_truth(
+        store, queries, k, n_probe, query_id, query_emb, max_sample
     )
-    truth = (
-        store.query(sample, k, n_probe=n_probe,
-                    query_id=query_id, query_emb=query_emb)
-        .select(query_id, store.id_col)
-        .localCheckpoint()  # reused once per walk step
-    )
-    n_truth = truth.count()
     if n_truth == 0:
         return (1, 1.0) if with_recall else 1
     refine = 1
@@ -563,10 +574,9 @@ def measured_refine(
             sample, k, n_probe=n_probe, scoring=scoring,
             refine=refine, query_id=query_id, query_emb=query_emb,
         )
-        hits = truth.join(
+        recall = truth.join(
             got.select(query_id, store.id_col), [query_id, store.id_col]
-        ).count()
-        recall = hits / n_truth
+        ).count() / n_truth
         if recall >= target_recall or refine >= max_refine:
             if recall < target_recall:
                 import warnings
@@ -610,339 +620,6 @@ def measured_pq_refine(
 # Above this many enrolled index rows, query() scores candidates in the
 # Arrow kernel instead of the interpreted JVM HOF fold (see query()).
 KERNEL_INDEX_THRESHOLD = 100_000
-
-
-def _score_candidates_kernel(
-    cand: DataFrame, query_id: str, id_col: str
-) -> DataFrame:
-    """Arrow-vectorized cosine scoring of (query, candidate) rows —
-    bit-parity twin of ``round(dot(__qe, emb) / (__nq * l2_norm(emb)),
-    SIM_ROUND)``: the dot and the candidate norm accumulate
-    dimension-by-dimension in ASCENDING order (the identical IEEE-754
-    float64 fold), ``sqrt`` is IEEE-exact, the denominator multiplies
-    ``__nq * nc`` before the divide exactly as the JVM expression does,
-    and the 9dp rounding stays JVM-side (numpy would round half-even
-    where Spark rounds half-up). Input rows carry
-    (query_id, id, __qe, __nq, emb); output (query_id, id, sim)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    in_fields = {f.name: f for f in cand.schema.fields}
-    out_schema = StructType(
-        [
-            in_fields[query_id],
-            in_fields[id_col],
-            StructField("__sim_raw", DoubleType()),
-        ]
-    )
-
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                yield pd.DataFrame(
-                    {query_id: pdf[query_id], id_col: pdf[id_col],
-                     "__sim_raw": pd.Series([], dtype="float64")}
-                )
-                continue
-            qe = np.array(pdf["__qe"].tolist(), dtype=np.float64)
-            emb = np.array(pdf["emb"].tolist(), dtype=np.float64)
-            n = len(pdf)
-            s, nc = np.zeros(n), np.zeros(n)
-            for i in range(emb.shape[1]):  # ascending-dim: JVM bit-parity
-                s += qe[:, i] * emb[:, i]
-                nc += emb[:, i] * emb[:, i]
-            sim = s / (pdf["__nq"].to_numpy() * np.sqrt(nc))
-            yield pd.DataFrame(
-                {query_id: pdf[query_id], id_col: pdf[id_col],
-                 "__sim_raw": sim}
-            )
-
-    return (
-        cand.select(query_id, id_col, "__qe", "__nq", "emb")
-        .mapInPandas(score, out_schema)
-        .select(
-            query_id, id_col,
-            F.round(F.col("__sim_raw"), SIM_ROUND).alias("sim"),
-        )
-    )
-
-
-def _score_candidates_pq_kernel(
-    cand: DataFrame, query_id: str, id_col: str,
-    codebooks: list[list[list[float]]],
-) -> DataFrame:
-    """Arrow ADC scoring of (query, candidate-codes) rows — the IVF-PQ
-    probe's scorer: candidates arrive as ``m`` small ints, the codeword
-    rows are gathered from the broadcast codebook array, and the cosine
-    estimate accumulates per subspace in the engine's subspace-grouped
-    IEEE-754 fold (bit-equal to ``pq.pq_adc_scores`` / the LUT kernel —
-    see operators/pq.py for why the grouping is pinned). Rounding stays
-    JVM-side. Input rows carry (query_id, id, __qe, __nq, codes);
-    output (query_id, id, sim)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    m = len(codebooks)
-    sd = len(codebooks[0][0])
-    C = np.array(codebooks, dtype=np.float64)  # (m, k_sub, sd)
-    in_fields = {f.name: f for f in cand.schema.fields}
-    out_schema = StructType(
-        [
-            in_fields[query_id],
-            in_fields[id_col],
-            StructField("__sim_raw", DoubleType()),
-        ]
-    )
-
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                yield pd.DataFrame(
-                    {query_id: pdf[query_id], id_col: pdf[id_col],
-                     "__sim_raw": pd.Series([], dtype="float64")}
-                )
-                continue
-            qe = np.array(pdf["__qe"].tolist(), dtype=np.float64)
-            cd = np.array(pdf["codes"].tolist(), dtype=np.int64)
-            n = len(pdf)
-            s, cn = np.zeros(n), np.zeros(n)
-            for j in range(m):  # subspace order = the grouped fold
-                crow = C[j, cd[:, j], :]  # (n, sd) gathered codewords
-                sj, nj = np.zeros(n), np.zeros(n)
-                for i in range(sd):  # ascending-dim: JVM bit-parity
-                    sj += qe[:, j * sd + i] * crow[:, i]
-                    nj += crow[:, i] * crow[:, i]
-                s += sj
-                cn += nj
-            sim = s / (pdf["__nq"].to_numpy() * np.sqrt(cn))
-            yield pd.DataFrame(
-                {query_id: pdf[query_id], id_col: pdf[id_col],
-                 "__sim_raw": sim}
-            )
-
-    return (
-        cand.select(query_id, id_col, "__qe", "__nq", "codes")
-        .mapInPandas(score, out_schema)
-        .select(
-            query_id, id_col,
-            F.round(F.col("__sim_raw"), SIM_ROUND).alias("sim"),
-        )
-    )
-
-
-def _score_candidates_rpq_kernel(
-    cand: DataFrame, query_id: str, id_col: str,
-    codebooks: list[list[list[float]]],
-    centroids: list[list[float]],
-) -> DataFrame:
-    """Residual-ADC twin of ``_score_candidates_pq_kernel`` (round 13):
-    candidates additionally carry ``cell``, and the estimate
-    reconstructs cos(q, centroid[cell] + Σ_j row_j) with the
-    centroid-extended grouped fold of ``pq.pq_residual_scores`` —
-    numerator: the in-order q·centroid dot first, then the subspace
-    partials in order; denominator: the centroid norm, the 2·cross
-    terms in subspace order, then the row norms — so sims are bit-equal
-    to the declarative form and the LUT kernel. Input rows carry
-    (query_id, id, __qe, __nq, cell, codes); output (query_id, id, sim)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    m = len(codebooks)
-    sd = len(codebooks[0][0])
-    dim = m * sd
-    C = np.array(codebooks, dtype=np.float64)  # (m, k_sub, sd)
-    CC = np.array(centroids, dtype=np.float64)  # (k_cells, dim)
-    in_fields = {f.name: f for f in cand.schema.fields}
-    out_schema = StructType(
-        [
-            in_fields[query_id],
-            in_fields[id_col],
-            StructField("__sim_raw", DoubleType()),
-        ]
-    )
-
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                yield pd.DataFrame(
-                    {query_id: pdf[query_id], id_col: pdf[id_col],
-                     "__sim_raw": pd.Series([], dtype="float64")}
-                )
-                continue
-            qe = np.array(pdf["__qe"].tolist(), dtype=np.float64)
-            cd = np.array(pdf["codes"].tolist(), dtype=np.int64)
-            cg = CC[pdf["cell"].to_numpy(dtype=np.int64)]  # (n, dim)
-            n = len(pdf)
-            s, d = np.zeros(n), np.zeros(n)
-            for i in range(dim):  # numerator starts at the q·cent dot
-                s += qe[:, i] * cg[:, i]
-            for i in range(dim):
-                d += cg[:, i] * cg[:, i]
-            rows = [C[j, cd[:, j], :] for j in range(m)]  # (n, sd) each
-            for j in range(m):  # subspace order = the grouped fold
-                sj = np.zeros(n)
-                for i in range(sd):  # ascending-dim: JVM bit-parity
-                    sj += qe[:, j * sd + i] * rows[j][:, i]
-                s += sj
-            for j in range(m):
-                crj = np.zeros(n)
-                for i in range(sd):
-                    crj += cg[:, j * sd + i] * rows[j][:, i]
-                d += 2.0 * crj
-            for j in range(m):
-                nj = np.zeros(n)
-                for i in range(sd):
-                    nj += rows[j][:, i] * rows[j][:, i]
-                d += nj
-            sim = s / (pdf["__nq"].to_numpy() * np.sqrt(d))
-            yield pd.DataFrame(
-                {query_id: pdf[query_id], id_col: pdf[id_col],
-                 "__sim_raw": sim}
-            )
-
-    return (
-        cand.select(query_id, id_col, "__qe", "__nq", "cell", "codes")
-        .mapInPandas(score, out_schema)
-        .select(
-            query_id, id_col,
-            F.round(F.col("__sim_raw"), SIM_ROUND).alias("sim"),
-        )
-    )
-
-
-def _score_candidates_sq_kernel(
-    cand: DataFrame, query_id: str, id_col: str, bounds: dict
-) -> DataFrame:
-    """Arrow SQ8 scoring of (query, candidate-codes) rows — the byte
-    probe's scorer (round 14): candidates arrive as dim uint8 codes,
-    the midpoint decode ``mn + (c + ½)·rg/256`` runs in the same
-    float64 ops as the declarative ``sq_decode`` expression, and the
-    cosine accumulates dimension-by-dimension in ASCENDING order (the
-    ``_score_candidates_kernel`` bit-parity fold) against the exact
-    query side. Rounding stays JVM-side. Input rows carry
-    (query_id, id, __qe, __nq, codes); output (query_id, id, sim)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    mn = np.array(bounds["vmin"], dtype=np.float64)
-    rg = np.array(
-        [hi - lo for lo, hi in zip(bounds["vmin"], bounds["vmax"])],
-        dtype=np.float64,
-    )
-    dim = len(mn)
-    in_fields = {f.name: f for f in cand.schema.fields}
-    out_schema = StructType(
-        [
-            in_fields[query_id],
-            in_fields[id_col],
-            StructField("__sim_raw", DoubleType()),
-        ]
-    )
-
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                yield pd.DataFrame(
-                    {query_id: pdf[query_id], id_col: pdf[id_col],
-                     "__sim_raw": pd.Series([], dtype="float64")}
-                )
-                continue
-            qe = np.array(pdf["__qe"].tolist(), dtype=np.float64)
-            cd = np.array(pdf["codes"].tolist(), dtype=np.float64)
-            recon = mn + (cd + 0.5) * rg / 256.0  # sq_decode, exactly
-            n = len(pdf)
-            s, nc = np.zeros(n), np.zeros(n)
-            for i in range(dim):  # ascending-dim: JVM bit-parity
-                s += qe[:, i] * recon[:, i]
-                nc += recon[:, i] * recon[:, i]
-            sim = s / (pdf["__nq"].to_numpy() * np.sqrt(nc))
-            yield pd.DataFrame(
-                {query_id: pdf[query_id], id_col: pdf[id_col],
-                 "__sim_raw": sim}
-            )
-
-    return (
-        cand.select(query_id, id_col, "__qe", "__nq", "codes")
-        .mapInPandas(score, out_schema)
-        .select(
-            query_id, id_col,
-            F.round(F.col("__sim_raw"), SIM_ROUND).alias("sim"),
-        )
-    )
-
-
-def _score_candidates_bq_kernel(
-    cand: DataFrame, query_id: str, id_col: str, thresholds: dict
-) -> DataFrame:
-    """Arrow BQ1 scoring of (query, candidate-words) rows — the binary
-    probe's scorer (round 14): candidates arrive as dim/32 packed
-    words, the query side packs under the SAME thresholds inside the
-    kernel (symmetric encoding, float comparisons + exact integer
-    packing — bit-parity with bq_encode by construction), and the
-    score is the normalized Hamming similarity ``(dim − h) / dim`` —
-    h and dim are exact integers and dim is a power of two, so the
-    division itself is exact; rounding stays JVM-side (house style).
-    Input rows carry (query_id, id, __qe, __nq, words); output
-    (query_id, id, sim). ``__nq`` rides along unused — Hamming needs
-    no norms — keeping the candidate shape shared with every other
-    scorer."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    from biodata_pipeline_spark.operators.bq import BQ_WORD_BITS, _pop8
-
-    thr = np.array(thresholds["thr"], dtype=np.float64)
-    dim = len(thr)
-    n_words = dim // BQ_WORD_BITS
-    pow2 = (np.int64(1) << np.arange(BQ_WORD_BITS, dtype=np.int64))
-    pop8 = _pop8()
-    in_fields = {f.name: f for f in cand.schema.fields}
-    out_schema = StructType(
-        [
-            in_fields[query_id],
-            in_fields[id_col],
-            StructField("__sim_raw", DoubleType()),
-        ]
-    )
-
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                yield pd.DataFrame(
-                    {query_id: pdf[query_id], id_col: pdf[id_col],
-                     "__sim_raw": pd.Series([], dtype="float64")}
-                )
-                continue
-            qe = np.array(pdf["__qe"].tolist(), dtype=np.float64)
-            qbits = (qe > thr).astype(np.int64)
-            qw = np.stack(
-                [
-                    qbits[:, w * BQ_WORD_BITS:(w + 1) * BQ_WORD_BITS] @ pow2
-                    for w in range(n_words)
-                ],
-                axis=1,
-            )
-            vw = np.array(pdf["words"].tolist(), dtype=np.int64)
-            x = np.bitwise_xor(qw, vw)
-            h = pop8[x.view(np.uint8)].reshape(len(pdf), -1).sum(axis=1)
-            yield pd.DataFrame(
-                {query_id: pdf[query_id], id_col: pdf[id_col],
-                 "__sim_raw": (dim - h) / float(dim)}
-            )
-
-    return (
-        cand.select(query_id, id_col, "__qe", "words")
-        .mapInPandas(score, out_schema)
-        .select(
-            query_id, id_col,
-            F.round(F.col("__sim_raw"), SIM_ROUND).alias("sim"),
-        )
-    )
 
 
 def _assign_cells(
@@ -1229,13 +906,7 @@ class VectorIndexStore:
 
         cents = self.centroids(spark)  # raises if the store is missing
         dim = len(cents[0])
-        parts = _index_component_frames(spark, self.path, "assignments")
-        full = parts[0].select("id", "emb", "cell")
-        for p in parts[1:]:
-            full = full.unionByName(p.select("id", "emb", "cell"))
-        live = self._minus_tombstones(
-            spark, full.dropDuplicates(["id"])
-        )
+        live = self._live(spark, ("id", "emb", "cell"))
         if k_sub is None:
             # size-aware default (VERDICT r13 #2, the m-fix one knob
             # later): the byte-code arm once the live corpus clears the
@@ -1471,19 +1142,41 @@ class VectorIndexStore:
         doc = _read_store_doc(spark, self.path, "sq_meta")
         return doc is not None and not doc.get("disabled")
 
-    def _sq_bounds(self, spark) -> dict:
-        doc = _read_store_doc(spark, self.path, "sq_meta")
+    def _layer_doc(self, spark, layer: str, enable: str, fits: str) -> dict:
+        """The fitted doc of a code layer (SQ8 bounds, BQ1 thresholds);
+        raises when the layer is off or its ``enable`` did not finish."""
+        doc_name = {"SQ8": "sq_meta", "BQ1": "bq_meta"}[layer]
+        doc = _read_store_doc(spark, self.path, doc_name)
         if doc is None or doc.get("disabled"):
             raise ValueError(
-                f"no SQ8 layer at {self.path}: enable_sq8() fits the "
-                "bounds before byte scoring can run"
+                f"no {layer} layer at {self.path}: {enable}() fits the "
+                f"{fits} scoring can run"
                 + (
-                    " (a prior enable_sq8 did not complete — re-run it)"
+                    f" (a prior {enable} did not complete — re-run it)"
                     if doc is not None
                     else ""
                 )
             )
         return doc
+
+    def _attach_layer(self, spark, coded, doc_name: str, comp: str,
+                      tag: str, doc: dict) -> int:
+        """The disable-first attach protocol shared by ``enable_sq8``
+        and ``enable_bq``: materialize ``coded`` BEFORE any store
+        mutation, tombstone the old doc, retire the old ``comp`` state,
+        write the fresh encode, and flip the doc LAST."""
+        n = coded.count()
+        if _read_store_doc(spark, self.path, doc_name) is not None:
+            _write_store_doc(spark, self.path, doc_name, {"disabled": True})
+        self._retire_codes_component(spark, comp)
+        SignatureStore._write_batch(spark, coded, f"{self.path}/{comp}", tag)
+        _write_store_doc(spark, self.path, doc_name, doc)
+        return n
+
+    def _sq_bounds(self, spark) -> dict:
+        return self._layer_doc(
+            spark, "SQ8", "enable_sq8", "bounds before byte"
+        )
 
     def enable_sq8(self, spark) -> int:
         """Attach an SQ8 layer (PQ's simpler, stronger-recall sibling —
@@ -1521,26 +1214,14 @@ class VectorIndexStore:
 
         cents = self.centroids(spark)  # raises if the store is missing
         dim = len(cents[0])
-        parts = _index_component_frames(spark, self.path, "assignments")
-        full = parts[0].select("id", "emb", "cell")
-        for p in parts[1:]:
-            full = full.unionByName(p.select("id", "emb", "cell"))
-        live = self._minus_tombstones(spark, full.dropDuplicates(["id"]))
+        live = self._live(spark, ("id", "emb", "cell"))
         bounds = sq_fit(live, id_col="id", emb_col="emb", dim=dim)
         coded = sq_encode_kernel(
             live, bounds, emb_col="emb", codes_col="codes"
         ).select("id", "cell", "codes").localCheckpoint()
-        n = coded.count()  # materialized BEFORE any store mutation
-        if _read_store_doc(spark, self.path, "sq_meta") is not None:
-            _write_store_doc(
-                spark, self.path, "sq_meta", {"disabled": True}
-            )
-        self._retire_codes_component(spark, "sq_codes")
-        SignatureStore._write_batch(
-            spark, coded, f"{self.path}/sq_codes", "sq_enable"
+        return self._attach_layer(
+            spark, coded, "sq_meta", "sq_codes", "sq_enable", bounds
         )
-        _write_store_doc(spark, self.path, "sq_meta", bounds)
-        return n
 
     # -- binary quantization (the 1-bit Hamming probe path, r14) ------------
     def bq_enabled(self, spark) -> bool:
@@ -1548,18 +1229,9 @@ class VectorIndexStore:
         return doc is not None and not doc.get("disabled")
 
     def _bq_thresholds(self, spark) -> dict:
-        doc = _read_store_doc(spark, self.path, "bq_meta")
-        if doc is None or doc.get("disabled"):
-            raise ValueError(
-                f"no BQ1 layer at {self.path}: enable_bq() fits the "
-                "thresholds before Hamming scoring can run"
-                + (
-                    " (a prior enable_bq did not complete — re-run it)"
-                    if doc is not None
-                    else ""
-                )
-            )
-        return doc
+        return self._layer_doc(
+            spark, "BQ1", "enable_bq", "thresholds before Hamming"
+        )
 
     def enable_bq(self, spark, train_sample: int | None = 100_000) -> int:
         """Attach a BQ1 layer (the 1-bit end of the curve — see
@@ -1590,11 +1262,7 @@ class VectorIndexStore:
 
         cents = self.centroids(spark)  # raises if the store is missing
         dim = len(cents[0])
-        parts = _index_component_frames(spark, self.path, "assignments")
-        full = parts[0].select("id", "emb", "cell")
-        for p in parts[1:]:
-            full = full.unionByName(p.select("id", "emb", "cell"))
-        live = self._minus_tombstones(spark, full.dropDuplicates(["id"]))
+        live = self._live(spark, ("id", "emb", "cell"))
         fit_src = (
             live if train_sample is None
             else md5_top_n(live, train_sample, "id")
@@ -1603,17 +1271,9 @@ class VectorIndexStore:
         coded = bq_encode_kernel(
             live, thr, emb_col="emb", words_col="words"
         ).select("id", "cell", "words").localCheckpoint()
-        n = coded.count()  # materialized BEFORE any store mutation
-        if _read_store_doc(spark, self.path, "bq_meta") is not None:
-            _write_store_doc(
-                spark, self.path, "bq_meta", {"disabled": True}
-            )
-        self._retire_codes_component(spark, "bq_words")
-        SignatureStore._write_batch(
-            spark, coded, f"{self.path}/bq_words", "bq_enable"
+        return self._attach_layer(
+            spark, coded, "bq_meta", "bq_words", "bq_enable", thr
         )
-        _write_store_doc(spark, self.path, "bq_meta", thr)
-        return n
 
     def sq_drift(self, spark) -> dict:
         """Measured drift signal for the SQ8 layer — the 'refit when
@@ -1631,11 +1291,7 @@ class VectorIndexStore:
         bounds = self._sq_bounds(spark)
         mnlit = F.array(*[F.lit(float(v)) for v in bounds["vmin"]])
         mxlit = F.array(*[F.lit(float(v)) for v in bounds["vmax"]])
-        parts = _index_component_frames(spark, self.path, "assignments")
-        full = parts[0].select("id", "emb")
-        for p in parts[1:]:
-            full = full.unionByName(p.select("id", "emb"))
-        live = self._minus_tombstones(spark, full.dropDuplicates(["id"]))
+        live = self._live(spark, ("id", "emb"))
         emb = F.col("emb").cast("array<double>")
         clamped = (
             F.exists(
@@ -1666,11 +1322,7 @@ class VectorIndexStore:
         scan into ≤ dim groups."""
         thr = self._bq_thresholds(spark)["thr"]
         thrlit = F.array(*[F.lit(float(t)) for t in thr])
-        parts = _index_component_frames(spark, self.path, "assignments")
-        full = parts[0].select("id", "emb")
-        for p in parts[1:]:
-            full = full.unionByName(p.select("id", "emb"))
-        live = self._minus_tombstones(spark, full.dropDuplicates(["id"]))
+        live = self._live(spark, ("id", "emb"))
         emb = F.col("emb").cast("array<double>")
         rows = (
             live.select(
@@ -1760,12 +1412,17 @@ class VectorIndexStore:
         compacted table plus deltas, with crash-stale duplicates
         dropped (byte-identical by the replay contract, so any
         survivor is the row)."""
+        return self._live(spark)
+
+    def _live(self, spark, cols=("id", "emb")) -> DataFrame:
+        """``cols`` of every live enrolled row: all assignment parts,
+        crash-stale duplicates dropped, tombstones removed."""
         parts = _index_component_frames(spark, self.path, "assignments")
         if not parts:
             raise ValueError(f"no index at {self.path}")
-        full = parts[0].select("id", "emb")
+        full = parts[0].select(*cols)
         for p in parts[1:]:
-            full = full.unionByName(p.select("id", "emb"))
+            full = full.unionByName(p.select(*cols))
         return self._minus_tombstones(spark, full.dropDuplicates(["id"]))
 
     def rebuild(
@@ -2277,12 +1934,7 @@ class VectorIndexStore:
         # pipeline (probe set, scoring, ranking) stays coherent with
         # that row's embedding.
         qcells = (
-            queries.select(
-                F.col(query_id),
-                F.col(query_emb).cast("array<double>").alias("__qe"),
-                l2_norm(F.col(query_emb)).alias("__nq"),
-            )
-            .dropDuplicates([query_id])
+            query_frame(queries, query_id, query_emb)
             .crossJoin(F.broadcast(cdf))
             .withColumn(
                 "__csim", F.round(dot(F.col("__qe"), F.col("__cu")), SIM_ROUND)
@@ -2366,16 +2018,11 @@ class VectorIndexStore:
             if self._n_rows_cache is None:
                 self._n_rows_cache = sum(p.count() for p in _aparts())
             if self._n_rows_cache > kernel_threshold:
-                return _score_candidates_kernel(cand, query_id, self.id_col)
-            return cand.select(
-                query_id,
-                self.id_col,
-                F.round(
-                    dot(F.col("__qe"), F.col("emb"))
-                    / (F.col("__nq") * l2_norm(F.col("emb"))),
-                    SIM_ROUND,
-                ).alias("sim"),
-            )
+                return score_rows(
+                    cand, query_id, self.id_col, ["__qe", "__nq", "emb"],
+                    cosine_rows("emb"),
+                )
+            return cand.select(query_id, self.id_col, exact_sim("emb"))
 
         def _rank(scored, kk: int):
             # The shared compaction contract tolerates duplicate index
@@ -2390,17 +2037,12 @@ class VectorIndexStore:
             # removed vector must not occupy a rank and displace a live
             # top-k result — nor, on the refine path, eat one of the
             # refine·k exact-rescore slots.
-            w = Window.partitionBy(query_id).orderBy(
-                F.col("sim").desc(), F.col(self.id_col)
-            )
-            return (
+            return ranked(
                 self._minus_tombstones(
                     spark, scored.dropDuplicates([query_id, self.id_col]),
                     id_name=self.id_col,
-                )
-                .withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= kk)
-                .select(query_id, self.id_col, "rank", "sim")
+                ),
+                kk, "sim", query_id, self.id_col,
             )
 
         def _exact_refine(approx_scored):
@@ -2437,56 +2079,33 @@ class VectorIndexStore:
                 _exact_scored(_cand_from(_aparts(), "assignments", "emb")), k
             )
 
-        if scoring in ("sq8", "sq8_refine"):
-            bounds = self._sq_bounds(spark)
-            scand = _cand_from(
-                _index_component_frames(spark, self.path, "sq_codes"),
-                "sq_codes",
-                "codes",
-            ).filter(
-                F.col("codes").isNotNull()  # defective rows: no codes
-            )
-            sqs = _score_candidates_sq_kernel(
-                scand, query_id, self.id_col, bounds
-            )
-            if scoring == "sq8":
-                return _rank(sqs, k)
-            return _exact_refine(sqs)
-
-        if scoring in ("bq1", "bq1_refine"):
-            thr = self._bq_thresholds(spark)
-            bcand = _cand_from(
-                _index_component_frames(spark, self.path, "bq_words"),
-                "bq_words",
-                "words",
-            ).filter(
-                F.col("words").isNotNull()  # defective rows: no words
-            )
-            bqs = _score_candidates_bq_kernel(
-                bcand, query_id, self.id_col, thr
-            )
-            if scoring == "bq1":
-                return _rank(bqs, k)
-            return _exact_refine(bqs)
-
-        books = self._pq_books(spark)  # refreshes the residual flag too
-        residual = self._pq_cache_residual
-        ccand = _cand_from(
-            _index_component_frames(spark, self.path, "pq_codes"),
-            "pq_codes",
-            "codes",
-            keep_cell=residual,
-        ).filter(
-            F.col("codes").isNotNull()  # defective-element rows: no codes
-        )
-        if residual:
-            adc = _score_candidates_rpq_kernel(
-                ccand, query_id, self.id_col, books, cents
-            )
+        # the compressed layers: candidates scanned as codes, scored by
+        # the layer's fold (operators/{sq,bq,pq}.py). Defective-element
+        # rows carry no codes.
+        family = scoring.removesuffix("_refine")
+        residual = False
+        if family == "sq8":
+            comp, col = "sq_codes", "codes"
+            fold = sq_rows(self._sq_bounds(spark))
+        elif family == "bq1":
+            comp, col = "bq_words", "words"
+            fold = bq_rows(self._bq_thresholds(spark))
         else:
-            adc = _score_candidates_pq_kernel(
-                ccand, query_id, self.id_col, books
+            books = self._pq_books(spark)  # refreshes the residual flag too
+            residual = self._pq_cache_residual
+            comp, col = "pq_codes", "codes"
+            fold = (
+                residual_adc_rows(books, cents) if residual
+                else adc_rows(books)
             )
-        if scoring == "adc":
-            return _rank(adc, k)
-        return _exact_refine(adc)
+        cand = _cand_from(
+            _index_component_frames(spark, self.path, comp), comp, col,
+            keep_cell=residual,
+        ).filter(F.col(col).isNotNull())
+        approx = score_rows(
+            cand, query_id, self.id_col,
+            ["__qe", "__nq", *(["cell"] if residual else []), col], fold,
+        )
+        if scoring == family:
+            return _rank(approx, k)
+        return _exact_refine(approx)

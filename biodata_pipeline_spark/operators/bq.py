@@ -41,20 +41,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from biodata_pipeline_spark.functions.vector import dot, l2_norm
+from biodata_pipeline_spark.operators.scoring import (
+    column_matrix,
+    encode_rows,
+    exact_rerank,
+    finite_vectors,
+    has_non_finite,
+    ranked,
+    score_rows,
+)
 
 BQ_WORD_BITS = 32  # bits packed per stored long (sign-bit headroom)
-
-
-def _defective(emb) -> F.Column:
-    """The engine-wide geometry defect predicate (sq_fit's): any null /
-    NaN / infinite element."""
-    return F.exists(
-        emb,
-        lambda x: x.isNull()
-        | F.isnan(x)
-        | (F.abs(x) == F.lit(float("inf"))),
-    )
 
 
 def bq_valid(df: DataFrame, emb_col: str = "embedding", dim: int = 64):
@@ -62,12 +59,7 @@ def bq_valid(df: DataFrame, emb_col: str = "embedding", dim: int = 64):
     elements, every element finite. Fit, encode, and the declared
     queries' exact ground truth all draw from THIS set, so recall
     numerators and denominators share one candidate universe."""
-    emb = F.col(emb_col).cast("array<double>")
-    return df.filter(
-        F.col(emb_col).isNotNull()
-        & (F.size(emb_col) == dim)
-        & ~_defective(emb)
-    )
+    return finite_vectors(df, emb_col, dim)
 
 
 def bq_fit(
@@ -168,7 +160,7 @@ def bq_encode(
     )
     return base.withColumn(
         words_col,
-        F.when(_defective(emb), F.lit(None)).otherwise(words),
+        F.when(has_non_finite(emb), F.lit(None)).otherwise(words),
     )
 
 
@@ -187,53 +179,19 @@ def bq_encode_kernel(
     there is not even a rounding boundary. Defective rows get NULL
     words. Carries all input columns; adds ``words_col``."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import ArrayType, LongType, StructField
-    from pyspark.sql.types import StructType
+    from pyspark.sql.types import LongType
 
-    thr = np.array(thresholds["thr"], dtype=np.float64)
-    dim = len(thr)
+    dim = len(thresholds["thr"])
     if dim % BQ_WORD_BITS:
         raise ValueError(
             f"bq_encode_kernel: dim {dim} not a multiple of {BQ_WORD_BITS}"
         )
-    n_words = dim // BQ_WORD_BITS
-    pow2 = (np.int64(1) << np.arange(BQ_WORD_BITS, dtype=np.int64))
-    base = df.filter(
-        F.col(emb_col).isNotNull() & (F.size(emb_col) == dim)
-    )
-    out_schema = StructType(
-        list(base.schema.fields)
-        + [StructField(words_col, ArrayType(LongType()))]
-    )
-    emb_name = emb_col
+    pack = _packer(thresholds)
 
-    def kern(it):
-        for pdf in it:
-            res = pdf.copy()
-            if not len(pdf):
-                res[words_col] = pd.Series([], dtype="object")
-                yield res
-                continue
-            mat = np.array(pdf[emb_name].tolist(), dtype=np.float64)
-            finite = np.isfinite(mat).all(axis=1)  # None->NaN on convert
-            with np.errstate(invalid="ignore"):
-                bits = (mat > thr).astype(np.int64)
-            words = np.stack(
-                [
-                    bits[:, w * BQ_WORD_BITS:(w + 1) * BQ_WORD_BITS] @ pow2
-                    for w in range(n_words)
-                ],
-                axis=1,
-            )
-            out = [
-                [int(x) for x in words[r]] if finite[r] else None
-                for r in range(mat.shape[0])
-            ]
-            res[words_col] = pd.Series(out, dtype="object", index=pdf.index)
-            yield res
+    def encode(mat, pdf):
+        return pack(mat), np.isfinite(mat).all(axis=1)
 
-    return base.mapInPandas(kern, out_schema)
+    return encode_rows(df, emb_col, dim, words_col, LongType(), encode)
 
 
 def hamming(a, b) -> F.Column:
@@ -250,19 +208,38 @@ def hamming(a, b) -> F.Column:
     ).cast("int")
 
 
-# popcount lookup for the Arrow kernel (numpy 1.x has no bitwise_count)
-_POP8 = None
+def _packer(thresholds: dict):
+    """numpy twin of ``bq_encode``'s packing, as a closure: identical
+    float64 ``x > thr`` comparisons, then an exact int64 dot of each
+    32-bit slice with distinct powers of two."""
+    import numpy as np
 
+    thr = np.array(thresholds["thr"], dtype=np.float64)
+    w = BQ_WORD_BITS
+    pow2 = np.int64(1) << np.arange(w, dtype=np.int64)
 
-def _pop8():
-    global _POP8
-    if _POP8 is None:
-        import numpy as np
-
-        _POP8 = np.array(
-            [bin(i).count("1") for i in range(256)], dtype=np.int64
+    def pack(mat):
+        with np.errstate(invalid="ignore"):
+            bits = (mat > thr).astype(np.int64)
+        return np.stack(
+            [bits[:, i:i + w] @ pow2 for i in range(0, len(thr), w)], axis=1
         )
-    return _POP8
+
+    return pack
+
+
+def _hamming_np():
+    """numpy twin of ``hamming``, as a closure: xor + byte-table
+    popcount on int64 views (numpy 1.x has no bitwise_count) — exact
+    integer math."""
+    import numpy as np
+
+    pop8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.int64)
+    return lambda qw, vw: (
+        pop8[np.bitwise_xor(qw, vw).view(np.uint8)]
+        .reshape(len(vw), -1)
+        .sum(axis=1)
+    )
 
 
 def bq_hamming_kernel(
@@ -272,52 +249,42 @@ def bq_hamming_kernel(
     qwords_col: str = "__qw",
     words_col: str = "bq_words",
 ) -> DataFrame:
-    """Arrow Hamming scorer of (query, candidate-words) ROWS — the
-    store probe's scorer shape (``_score_candidates_kernel``'s input
-    contract). xor + byte-table popcount on int64 views: exact integer
-    math, trivially bit-equal to the declarative ``hamming`` fold.
-    Input rows carry (query_id, id, qwords, words); output
-    (query_id, id, hamming)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import IntegerType, StructField, StructType
+    """Arrow Hamming scorer of (query, candidate-words) ROWS on the
+    ``score_rows`` harness, trivially bit-equal to the declarative
+    ``hamming`` fold. Input rows carry (query_id, id, qwords, words);
+    output (query_id, id, hamming) — integers, no rounding."""
+    ham = _hamming_np()
 
-    pop8 = _pop8()
-    in_fields = {f.name: f for f in cand.schema.fields}
-    out_schema = StructType(
-        [
-            in_fields[query_id],
-            in_fields[id_col],
-            StructField("hamming", IntegerType()),
-        ]
+    def fold(pdf):
+        return ham(
+            column_matrix(pdf, qwords_col, "int64"),
+            column_matrix(pdf, words_col, "int64"),
+        ).astype("int32")
+
+    return score_rows(
+        cand, query_id, id_col, [qwords_col, words_col], fold,
+        "hamming", integer=True,
     )
 
-    def score(it):
-        for pdf in it:
-            if not len(pdf):
-                yield pd.DataFrame(
-                    {
-                        query_id: pdf[query_id],
-                        id_col: pdf[id_col],
-                        "hamming": pd.Series([], dtype="int32"),
-                    }
-                )
-                continue
-            qw = np.array(pdf[qwords_col].tolist(), dtype=np.int64)
-            vw = np.array(pdf[words_col].tolist(), dtype=np.int64)
-            x = np.bitwise_xor(qw, vw)
-            hams = pop8[x.view(np.uint8)].reshape(len(pdf), -1).sum(axis=1)
-            yield pd.DataFrame(
-                {
-                    query_id: pdf[query_id],
-                    id_col: pdf[id_col],
-                    "hamming": hams.astype("int32"),
-                }
-            )
 
-    return cand.select(query_id, id_col, qwords_col, words_col).mapInPandas(
-        score, out_schema
-    )
+def bq_rows(thresholds: dict, words_col: str = "words"):
+    """``score_rows`` fold for (query, candidate-words) rows, the binary
+    probe's scorer: the query packs under the SAME thresholds inside the
+    kernel (symmetric encoding), and the score is the normalized Hamming
+    similarity ``(dim − h) / dim`` — h and dim are exact integers and
+    dim is a power of two, so the division itself is exact. Rows carry
+    ``__qe`` and ``words_col``."""
+    dim = len(thresholds["thr"])
+    pack, ham = _packer(thresholds), _hamming_np()
+
+    def fold(pdf):
+        h = ham(
+            pack(column_matrix(pdf, "__qe")),
+            column_matrix(pdf, words_col, "int64"),
+        )
+        return (dim - h) / float(dim)
+
+    return fold
 
 
 def bq_hamming_ranked(
@@ -337,8 +304,6 @@ def bq_hamming_ranked(
     ``rank <= k`` of the top-``r·k``), so the |Q|×|C| crossJoin +
     Hamming fold + window run once per audit instead of once per
     variant."""
-    from pyspark.sql import Window
-
     q = (
         bq_encode(
             queries.select(
@@ -360,61 +325,7 @@ def bq_hamming_ranked(
             hamming("__qw", words_col).alias("hamming"),
         )
     )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("hamming").asc(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= n)
-        .select(query_id, id_col, "rank", "hamming")
-    )
-
-
-def exact_rerank(
-    cand: DataFrame,
-    queries: DataFrame,
-    vectors: DataFrame,
-    k: int,
-    query_id: str = "query_id",
-    query_emb: str = "query_emb",
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-) -> DataFrame:
-    """Exact-cosine re-rank of a bounded candidate set — the refine arm
-    shared by ``bq_hamming_topk`` and the audit: join the candidates'
-    true vectors, score round(dot/(nq·nc), 9), take top-``k`` per query
-    (sim desc, id tie-break)."""
-    from pyspark.sql import Window
-
-    from biodata_pipeline_spark.operators.similarity import SIM_ROUND
-
-    qe = queries.select(
-        F.col(query_id),
-        F.col(query_emb).cast("array<double>").alias("__qe"),
-        l2_norm(F.col(query_emb)).alias("__nq"),
-    ).dropDuplicates([query_id])
-    exact = (
-        cand.select(query_id, id_col)
-        .join(vectors.select(id_col, emb_col), id_col)
-        .join(qe, query_id)
-        .select(
-            query_id,
-            id_col,
-            F.round(
-                dot(F.col("__qe"), F.col(emb_col))
-                / (F.col("__nq") * l2_norm(F.col(emb_col))),
-                SIM_ROUND,
-            ).alias("sim"),
-        )
-    )
-    w2 = Window.partitionBy(query_id).orderBy(
-        F.col("sim").desc(), F.col(id_col)
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(query_id, id_col, "rank", "sim")
-    )
+    return ranked(scored, n, "hamming", query_id, id_col, ascending=True)
 
 
 def bq_hamming_topk(

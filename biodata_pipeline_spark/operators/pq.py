@@ -43,8 +43,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from biodata_pipeline_spark.functions.vector import dot, l2_norm
+from biodata_pipeline_spark.functions.vector import dot
 from biodata_pipeline_spark.operators.kmeans import kmeans_fit
+from biodata_pipeline_spark.operators.scoring import (
+    column_matrix,
+    cos_sim,
+    encode_rows,
+    exact_rerank,
+    fold_pairs,
+    fold_rows,
+    has_non_finite,
+    query_frame,
+    ranked,
+    score_bulk,
+)
 from biodata_pipeline_spark.operators.similarity import (
     SIM_ROUND,
     matrix_literal,
@@ -189,15 +201,9 @@ def pq_encode_ref(
                 0,
             )
         )
-    defective = F.exists(
-        emb,
-        lambda x: x.isNull()
-        | F.isnan(x)
-        | (F.abs(x) == F.lit(float("inf"))),
-    )
     return base.withColumn(
         codes_col,
-        F.when(defective, F.lit(None)).otherwise(F.array(*parts)),
+        F.when(has_non_finite(emb), F.lit(None)).otherwise(F.array(*parts)),
     )
 
 
@@ -232,56 +238,31 @@ def pq_encode_kernel(
     residual ``enable_pq`` 5× the raw attach at the 1M rung before the
     fusion (SCALING r13)."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import ArrayType, IntegerType, StructField
-    from pyspark.sql.types import StructType
+    from pyspark.sql.types import IntegerType
 
     m = len(codebooks)
     sd = len(codebooks[0][0])
-    dim = m * sd
     C = np.array(codebooks, dtype=np.float64)  # (m, k_sub, sd)
     CC = (
         np.array(centroids, dtype=np.float64)
         if centroids is not None
         else None
     )
-    base = df.filter(
-        F.col(emb_col).isNotNull() & (F.size(emb_col) == dim)
-    )
-    out_schema = StructType(
-        list(base.schema.fields)
-        + [StructField(codes_col, ArrayType(IntegerType()))]
-    )
-    emb_name = emb_col
 
-    def kern(it):
-        for pdf in it:
-            res = pdf.copy()
-            if not len(pdf):
-                res[codes_col] = pd.Series([], dtype="object")
-                yield res
-                continue
-            mat = np.array(pdf[emb_name].tolist(), dtype=np.float64)
-            if CC is not None:
-                mat = mat - CC[pdf[cell_col].to_numpy(dtype=np.int64)]
-            n = mat.shape[0]
-            finite = np.isfinite(mat).all(axis=1)  # None->NaN on convert
-            codes = np.zeros((n, m), dtype=np.int32)
-            for j in range(m):
-                sub = mat[:, j * sd:(j + 1) * sd]
-                acc = np.zeros((n, C.shape[1]))
-                for i in range(sd):  # ascending-dim: JVM bit-parity
-                    d = sub[:, i][:, None] - C[j, :, i][None, :]
-                    acc += d * d
-                codes[:, j] = np.argmin(acc, axis=1)  # first occ = lowest
-            out = [
-                [int(c) for c in codes[r]] if finite[r] else None
-                for r in range(n)
-            ]
-            res[codes_col] = pd.Series(out, dtype="object", index=pdf.index)
-            yield res
+    def encode(mat, pdf):
+        if CC is not None:
+            mat = mat - CC[pdf[cell_col].to_numpy(dtype=np.int64)]
+        codes = np.zeros((len(mat), m), dtype=np.int32)
+        for j in range(m):
+            sub = mat[:, j * sd:(j + 1) * sd]
+            acc = np.zeros((len(mat), C.shape[1]))
+            for i in range(sd):  # ascending-dim: JVM bit-parity
+                d = sub[:, i][:, None] - C[j, :, i][None, :]
+                acc += d * d
+            codes[:, j] = np.argmin(acc, axis=1)  # first occ = lowest
+        return codes, np.isfinite(mat).all(axis=1)  # None->NaN on convert
 
-    return base.mapInPandas(kern, out_schema)
+    return encode_rows(df, emb_col, m * sd, codes_col, IntegerType(), encode)
 
 
 def pq_decode(
@@ -328,11 +309,7 @@ def pq_adc_scores(
     adds nothing)."""
     m = len(codebooks)
     sd = len(codebooks[0][0])
-    q = queries.select(
-        F.col(query_id),
-        F.col(query_emb).cast("array<double>").alias("__qe"),
-        l2_norm(F.col(query_emb)).alias("__nq"),
-    ).dropDuplicates([query_id])
+    q = query_frame(queries, query_id, query_emb)
     mats = _codebook_literals(codebooks)
     rows = [
         F.element_at(mats[j], F.element_at(F.col(codes_col), j + 1) + 1)
@@ -372,94 +349,64 @@ def pq_adc_scores_kernel(
     id_col: str = "vec_id",
     codes_col: str = "codes",
 ) -> DataFrame:
-    """Arrow LUT-ADC twin of ``pq_adc_scores`` for bulk scoring: per
-    query, precompute ``lut[j][c] = dot(q_j, codebook[j][c])`` and
-    ``nrm2[j][c] = ||codebook[j][c]||²`` (each by the ascending-dim
-    fold), then score each candidate with ``m`` table lookups. The
-    cross-subspace accumulation runs j = 0..m-1 in order — exactly the
-    subspace-grouped fold ``pq_adc_scores`` (and the DuckDB oracle)
-    spell declaratively — so sims are bit-equal to the declarative
-    path by construction (pytest-pinned); the SIM_ROUND rounding stays
-    JVM-side (numpy rounds half-even, Spark half-up). Query rows are collected
-    driver-side (bounded by the caller's query batch, the
-    centroid-collect discipline) and ship with the closure."""
+    """Arrow LUT-ADC twin of ``pq_adc_scores`` for bulk scoring, on the
+    ``score_bulk`` harness: per query, precompute ``lut[j][c] = dot(q_j,
+    codebook[j][c])`` and ``nrm2[j][c] = ||codebook[j][c]||²`` (each by
+    the ascending-dim fold), then score each candidate with ``m`` table
+    lookups. The cross-subspace accumulation runs j = 0..m-1 in order —
+    exactly the subspace-grouped fold ``pq_adc_scores`` (and the DuckDB
+    oracle) spell declaratively — so sims are bit-equal to the
+    declarative path by construction (pytest-pinned)."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
 
-    m = len(codebooks)
-    sd = len(codebooks[0][0])
     C = np.array(codebooks, dtype=np.float64)  # (m, k_sub, sd)
-    qrows = (
-        queries.select(
-            F.col(query_id),
-            F.col(query_emb).cast("array<double>").alias("__qe"),
-            l2_norm(F.col(query_emb)).alias("__nq"),
-        )
-        .dropDuplicates([query_id])
-        .collect()
-    )
-    qids = [r[query_id] for r in qrows]
-    qmat = np.array([r["__qe"] for r in qrows], dtype=np.float64)
-    qnrm = np.array([r["__nq"] for r in qrows], dtype=np.float64)
-    nq = len(qids)
-    # lut[q, j, c] = in-order dot(q_j, C[j, c]); nrm2[j, c] likewise
-    lut = np.zeros((nq, m, C.shape[1]))
-    nrm2 = np.zeros((m, C.shape[1]))
-    for j in range(m):
-        qs = qmat[:, j * sd:(j + 1) * sd] if nq else qmat.reshape(0, sd)
-        for i in range(sd):  # ascending-dim: JVM bit-parity
-            lut[:, j, :] += qs[:, i][:, None] * C[j, :, i][None, :]
-            nrm2[j, :] += C[j, :, i] * C[j, :, i]
+    sd = C.shape[2]
 
-    in_fields = {f.name: f for f in codes.schema.fields}
-    qf = queries.schema[query_id]
-    out_schema = StructType(
-        [
-            StructField(query_id, qf.dataType),
-            in_fields[id_col],
-            StructField("__sim_raw", DoubleType()),
+    def fold_for(qmat, qnrm):
+        # per subspace: (lut (nq, k_sub), nrm2 (k_sub,))
+        luts = [
+            fold_pairs(qmat[:, j * sd:(j + 1) * sd], C[j])
+            for j in range(len(C))
         ]
+
+        def fold(pdf):
+            cd = column_matrix(pdf, codes_col, "int64")  # (n, m)
+            s, cn = np.zeros((len(qmat), len(cd))), np.zeros(len(cd))
+            for j, (lut, nrm2) in enumerate(luts):  # subspace order
+                s += lut[:, cd[:, j]]
+                cn += nrm2[cd[:, j]]
+            return cos_sim(s, cn, qnrm[:, None])
+
+        return fold
+
+    return score_bulk(
+        queries, codes.filter(F.col(codes_col).isNotNull()), fold_for,
+        "sim_adc", [codes_col], query_id, query_emb, id_col,
     )
 
-    def score(it):
-        for pdf in it:
-            n = len(pdf)
-            if not n or not nq:
-                yield pd.DataFrame(
-                    {
-                        query_id: pd.Series([], dtype="object"),
-                        id_col: pd.Series([], dtype=pdf[id_col].dtype),
-                        "__sim_raw": pd.Series([], dtype="float64"),
-                    }
-                )
-                continue
-            cd = np.array(pdf[codes_col].tolist(), dtype=np.int64)  # (n, m)
-            s = np.zeros((nq, n))
-            cn = np.zeros(n)
-            for j in range(m):  # subspace order = ascending-dim fold
-                s += lut[:, j, :][:, cd[:, j]]
-                cn += nrm2[j, cd[:, j]]
-            sim = s / (qnrm[:, None] * np.sqrt(cn)[None, :])
-            ids = pdf[id_col].to_numpy()
-            yield pd.DataFrame(
-                {
-                    query_id: np.repeat(qids, n),
-                    id_col: np.tile(ids, nq),
-                    "__sim_raw": sim.ravel(),
-                }
-            )
 
-    return (
-        codes.filter(F.col(codes_col).isNotNull())
-        .select(id_col, codes_col)
-        .mapInPandas(score, out_schema)
-        .select(
-            query_id,
-            id_col,
-            F.round(F.col("__sim_raw"), SIM_ROUND).alias("sim_adc"),
-        )
-    )
+def adc_rows(codebooks: list[list[list[float]]], codes_col: str = "codes"):
+    """``score_rows`` fold for (query, candidate-codes) rows, the IVF-PQ
+    probe's scorer: the codeword rows are gathered from the codebook
+    array and the cosine estimate accumulates per subspace in the
+    subspace-grouped fold, bit-equal to ``pq_adc_scores``. Rows carry
+    ``__qe``, ``__nq`` and ``codes_col``."""
+    import numpy as np
+
+    C = np.array(codebooks, dtype=np.float64)  # (m, k_sub, sd)
+    sd = C.shape[2]
+
+    def fold(pdf):
+        qe = column_matrix(pdf, "__qe")
+        cd = column_matrix(pdf, codes_col, "int64")
+        s, cn = np.zeros(len(cd)), np.zeros(len(cd))
+        for j in range(len(C)):  # subspace order = the grouped fold
+            sj, nj = fold_rows(qe[:, j * sd:(j + 1) * sd], C[j, cd[:, j], :])
+            s += sj
+            cn += nj
+        return cos_sim(s, cn, pdf["__nq"].to_numpy())
+
+    return fold
 
 
 def pq_adc_topk(
@@ -485,55 +432,21 @@ def pq_adc_topk(
     expensive full-vector read touches r·k rows per query instead of
     the corpus. Returns (query_id, id, rank, sim) where ``sim`` is the
     ADC score when unrefined, the exact cosine when refined."""
-    from pyspark.sql import Window
-
+    if refine and vectors is None:
+        raise ValueError("pq_adc_topk: refine>0 requires vectors")
     scorer = pq_adc_scores_kernel if use_kernel else pq_adc_scores
     scored = scorer(
         queries, codes, codebooks,
         query_id=query_id, query_emb=query_emb,
         id_col=id_col, codes_col=codes_col,
     )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("sim_adc").desc(), F.col(id_col)
-    )
     if not refine:
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(query_id, id_col, "rank", F.col("sim_adc").alias("sim"))
-        )
-    if vectors is None:
-        raise ValueError("pq_adc_topk: refine>0 requires vectors")
-    cand = (
-        scored.withColumn("__ark", F.row_number().over(w))
-        .filter(F.col("__ark") <= refine * k)
-        .select(query_id, id_col)
-    )
-    q = queries.select(
-        F.col(query_id),
-        F.col(query_emb).cast("array<double>").alias("__qe"),
-        l2_norm(F.col(query_emb)).alias("__nq"),
-    ).dropDuplicates([query_id])
-    exact = (
-        cand.join(vectors.select(id_col, emb_col), id_col)
-        .join(q, query_id)
-        .select(
-            query_id,
-            id_col,
-            F.round(
-                dot(F.col("__qe"), F.col(emb_col))
-                / (F.col("__nq") * l2_norm(F.col(emb_col))),
-                SIM_ROUND,
-            ).alias("sim"),
-        )
-    )
-    w2 = Window.partitionBy(query_id).orderBy(
-        F.col("sim").desc(), F.col(id_col)
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(query_id, id_col, "rank", "sim")
+        return ranked(
+            scored, k, "sim_adc", query_id, id_col
+        ).withColumnRenamed("sim_adc", "sim")
+    return exact_rerank(
+        ranked(scored, refine * k, "sim_adc", query_id, id_col),
+        queries, vectors, k, query_id, query_emb, id_col, emb_col,
     )
 
 
@@ -606,11 +519,7 @@ def pq_residual_scores(
     residuals. Returns (query_id, id, sim_adc)."""
     m = len(codebooks)
     sd = len(codebooks[0][0])
-    q = queries.select(
-        F.col(query_id),
-        F.col(query_emb).cast("array<double>").alias("__qe"),
-        l2_norm(F.col(query_emb)).alias("__nq"),
-    ).dropDuplicates([query_id])
+    q = query_frame(queries, query_id, query_emb)
     mats = _codebook_literals(codebooks)
     crow = F.element_at(matrix_literal(centroids), F.col(cell_col) + 1)
     rows = [
@@ -654,107 +563,85 @@ def pq_residual_scores_kernel(
     cell_col: str = "cell",
 ) -> DataFrame:
     """Arrow LUT twin of ``pq_residual_scores`` — the engine's bulk
-    path. Per query: lut[j][c] as in ``pq_adc_scores_kernel`` plus
-    qc[cell] = in-order dot(q, centroid); per cell: cn = in-order
-    ||centroid||², cross[j][c] = in-order dot(centroid_j, row_j) — all
-    driver-sized ((k_cells·m·k_sub) doubles), shipped in the closure.
-    Accumulation order matches the declarative form exactly (numerator:
-    qc then j ascending; denominator: cn, the 2·cross terms j
-    ascending, then the row norms j ascending), so sims are bit-equal
-    by construction; SIM_ROUND rounding stays JVM-side."""
+    path, on the ``score_bulk`` harness. Per query: lut[j][c] as in
+    ``pq_adc_scores_kernel`` plus qc[cell] = in-order dot(q, centroid);
+    per cell: cn = in-order ||centroid||², cross[j][c] = in-order
+    dot(centroid_j, row_j) — all driver-sized ((k_cells·m·k_sub)
+    doubles), shipped in the closure. Accumulation order matches the
+    declarative form exactly (numerator: qc then j ascending;
+    denominator: cn, the 2·cross terms j ascending, then the row norms j
+    ascending), so sims are bit-equal by construction."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
 
-    m = len(codebooks)
-    sd = len(codebooks[0][0])
-    dim = m * sd
     C = np.array(codebooks, dtype=np.float64)  # (m, k_sub, sd)
     CC = np.array(centroids, dtype=np.float64)  # (k_cells, dim)
-    qrows = (
-        queries.select(
-            F.col(query_id),
-            F.col(query_emb).cast("array<double>").alias("__qe"),
-            l2_norm(F.col(query_emb)).alias("__nq"),
-        )
-        .dropDuplicates([query_id])
-        .collect()
-    )
-    qids = [r[query_id] for r in qrows]
-    qmat = np.array([r["__qe"] for r in qrows], dtype=np.float64)
-    qnrm = np.array([r["__nq"] for r in qrows], dtype=np.float64)
-    nq = len(qids)
-    k_cells = CC.shape[0]
-    lut = np.zeros((nq, m, C.shape[1]))
-    rn2 = np.zeros((m, C.shape[1]))
-    cross = np.zeros((k_cells, m, C.shape[1]))
-    for j in range(m):
-        qs = qmat[:, j * sd:(j + 1) * sd] if nq else qmat.reshape(0, sd)
-        for i in range(sd):  # ascending-dim: JVM bit-parity
-            lut[:, j, :] += qs[:, i][:, None] * C[j, :, i][None, :]
-            rn2[j, :] += C[j, :, i] * C[j, :, i]
-            cross[:, j, :] += (
-                CC[:, j * sd + i][:, None] * C[j, :, i][None, :]
-            )
-    qc = np.zeros((nq, k_cells))
-    cn = np.zeros(k_cells)
-    for i in range(dim):  # ascending-dim full-width folds
-        if nq:
-            qc += qmat[:, i][:, None] * CC[:, i][None, :]
-        cn += CC[:, i] * CC[:, i]
+    m, sd = C.shape[0], C.shape[2]
+    # per cell: cross[j] (k_cells, k_sub) and cn (k_cells,)
+    cross = [fold_pairs(CC[:, j * sd:(j + 1) * sd], C[j])[0] for j in range(m)]
+    cn = fold_rows(CC, CC)[1]
 
-    in_fields = {f.name: f for f in codes.schema.fields}
-    qf = queries.schema[query_id]
-    out_schema = StructType(
-        [
-            StructField(query_id, qf.dataType),
-            in_fields[id_col],
-            StructField("__sim_raw", DoubleType()),
+    def fold_for(qmat, qnrm):
+        luts = [
+            fold_pairs(qmat[:, j * sd:(j + 1) * sd], C[j]) for j in range(m)
         ]
-    )
+        qc = fold_pairs(qmat, CC)[0]  # (nq, k_cells)
 
-    def score(it):
-        for pdf in it:
-            n = len(pdf)
-            if not n or not nq:
-                yield pd.DataFrame(
-                    {
-                        query_id: pd.Series([], dtype="object"),
-                        id_col: pd.Series([], dtype=pdf[id_col].dtype),
-                        "__sim_raw": pd.Series([], dtype="float64"),
-                    }
-                )
-                continue
-            cd = np.array(pdf[codes_col].tolist(), dtype=np.int64)
+        def fold(pdf):
+            cd = column_matrix(pdf, codes_col, "int64")
             cells = pdf[cell_col].to_numpy(dtype=np.int64)
-            s = qc[:, cells].copy()  # (nq, n): numerator starts at qc
+            s = qc[:, cells].copy()  # numerator starts at qc
             for j in range(m):
-                s += lut[:, j, :][:, cd[:, j]]
+                s += luts[j][0][:, cd[:, j]]
             d = cn[cells].copy()
             for j in range(m):
-                d += 2.0 * cross[cells, j, cd[:, j]]
+                d += 2.0 * cross[j][cells, cd[:, j]]
             for j in range(m):
-                d += rn2[j, cd[:, j]]
-            sim = s / (qnrm[:, None] * np.sqrt(d)[None, :])
-            ids = pdf[id_col].to_numpy()
-            yield pd.DataFrame(
-                {
-                    query_id: np.repeat(qids, n),
-                    id_col: np.tile(ids, nq),
-                    "__sim_raw": sim.ravel(),
-                }
-            )
+                d += luts[j][1][cd[:, j]]
+            return cos_sim(s, d, qnrm[:, None])
 
-    return (
-        codes.filter(F.col(codes_col).isNotNull())
-        .select(id_col, cell_col, codes_col)
-        .mapInPandas(score, out_schema)
-        .select(
-            query_id,
-            id_col,
-            F.round(F.col("__sim_raw"), SIM_ROUND).alias("sim_adc"),
-        )
+        return fold
+
+    return score_bulk(
+        queries, codes.filter(F.col(codes_col).isNotNull()), fold_for,
+        "sim_adc", [cell_col, codes_col], query_id, query_emb, id_col,
     )
+
+
+def residual_adc_rows(
+    codebooks: list[list[list[float]]],
+    centroids: list[list[float]],
+    codes_col: str = "codes",
+    cell_col: str = "cell",
+):
+    """Residual-ADC twin of ``adc_rows``: rows additionally carry
+    ``cell_col``, and the estimate reconstructs cos(q, centroid[cell] +
+    Σ_j row_j) with the centroid-extended grouped fold of
+    ``pq_residual_scores`` — numerator: the in-order q·centroid dot,
+    then the subspace partials in order; denominator: the centroid
+    norm, the 2·cross terms in subspace order, then the row norms."""
+    import numpy as np
+
+    C = np.array(codebooks, dtype=np.float64)  # (m, k_sub, sd)
+    CC = np.array(centroids, dtype=np.float64)  # (k_cells, dim)
+    m, sd = C.shape[0], C.shape[2]
+
+    def fold(pdf):
+        qe = column_matrix(pdf, "__qe")
+        cd = column_matrix(pdf, codes_col, "int64")
+        cg = CC[pdf[cell_col].to_numpy(dtype=np.int64)]  # (n, dim)
+        s, d = fold_rows(qe, cg)
+        rows = [C[j, cd[:, j], :] for j in range(m)]  # (n, sd) each
+        sub = [slice(j * sd, (j + 1) * sd) for j in range(m)]
+        for j in range(m):  # subspace order = the grouped fold
+            s += fold_rows(qe[:, sub[j]], rows[j])[0]
+        norms = [fold_rows(cg[:, sub[j]], rows[j]) for j in range(m)]
+        for crj, _ in norms:
+            d += 2.0 * crj
+        for _, nj in norms:
+            d += nj
+        return cos_sim(s, d, pdf["__nq"].to_numpy())
+
+    return fold
 
 
 def pq_residual_topk(
@@ -777,8 +664,8 @@ def pq_residual_topk(
     exact-refined against the ORIGINAL vectors (``vectors``: (id, emb))
     — ``pq_adc_topk``'s residual sibling, same rank/tie-break
     contract."""
-    from pyspark.sql import Window
-
+    if refine and vectors is None:
+        raise ValueError("pq_residual_topk: refine>0 requires vectors")
     scorer = (
         pq_residual_scores_kernel if use_kernel else pq_residual_scores
     )
@@ -787,45 +674,11 @@ def pq_residual_topk(
         query_id=query_id, query_emb=query_emb,
         id_col=id_col, codes_col=codes_col, cell_col=cell_col,
     )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("sim_adc").desc(), F.col(id_col)
-    )
     if not refine:
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(query_id, id_col, "rank", F.col("sim_adc").alias("sim"))
-        )
-    if vectors is None:
-        raise ValueError("pq_residual_topk: refine>0 requires vectors")
-    cand = (
-        scored.withColumn("__ark", F.row_number().over(w))
-        .filter(F.col("__ark") <= refine * k)
-        .select(query_id, id_col)
-    )
-    q = queries.select(
-        F.col(query_id),
-        F.col(query_emb).cast("array<double>").alias("__qe"),
-        l2_norm(F.col(query_emb)).alias("__nq"),
-    ).dropDuplicates([query_id])
-    exact = (
-        cand.join(vectors.select(id_col, emb_col), id_col)
-        .join(q, query_id)
-        .select(
-            query_id,
-            id_col,
-            F.round(
-                dot(F.col("__qe"), F.col(emb_col))
-                / (F.col("__nq") * l2_norm(F.col(emb_col))),
-                SIM_ROUND,
-            ).alias("sim"),
-        )
-    )
-    w2 = Window.partitionBy(query_id).orderBy(
-        F.col("sim").desc(), F.col(id_col)
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(query_id, id_col, "rank", "sim")
+        return ranked(
+            scored, k, "sim_adc", query_id, id_col
+        ).withColumnRenamed("sim_adc", "sim")
+    return exact_rerank(
+        ranked(scored, refine * k, "sim_adc", query_id, id_col),
+        queries, vectors, k, query_id, query_emb, id_col, emb_col,
     )

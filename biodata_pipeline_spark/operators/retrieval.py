@@ -23,6 +23,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from biodata_pipeline_spark.functions.vector import dot, l2_norm
+from biodata_pipeline_spark.operators.scoring import (
+    cosine_pairs,
+    query_frame,
+    score_bulk,
+)
 
 SIM_ROUND = 9  # ranking precision: collapses float64 ulp noise into ties
 
@@ -34,101 +39,13 @@ def _with_norm(df: DataFrame, emb_col: str, norm_col: str) -> DataFrame:
     return df.withColumn(norm_col, l2_norm(F.col(emb_col)))
 
 
-def _kernel_sim_stream(
-    queries: DataFrame,
-    corpus: DataFrame,
-    query_id: str,
-    corpus_id: str,
-    query_emb: str,
-    corpus_emb: str,
-) -> DataFrame:
-    """``(query_id, corpus_id, sim)`` scored by the Arrow numpy kernel —
-    bit-identical to the HOF ``dot/(nq*nc)`` path (same ascending-dim
-    float64 folds for the dot and both norms, product-then-divide, sim
-    rounded in the JVM after the kernel; the ``_kernel_scored`` parity
-    construction, pytest-pinned). Queries are collected driver-side
-    under the ``MAX_QUERY_ROWS`` gate; corpus embeddings must be
-    non-null and full-dim (every production caller pre-filters —
-    ``_pq_corpus``/``_sq_corpus``/``bq_valid``)."""
-    import numpy as np
-    import pandas as pd
-
-    q_rows = queries.select(query_id, query_emb).collect()
-    if len(q_rows) > MAX_QUERY_ROWS:
-        raise ValueError(
-            f"cosine_top_k kernel path: query set has {len(q_rows)} rows, "
-            f"over the driver-collect bound of {MAX_QUERY_ROWS}; score "
-            "with the HOF path (use_kernel=False) instead"
-        )
-    if not q_rows:
-        # HOF parity (ADVICE r15): an empty query set cross-joined with
-        # the corpus is an empty scored stream, not an error
-        spark = queries.sparkSession
-        qid_t = queries.schema[query_id].dataType.simpleString()
-        cid_t = corpus.schema[corpus_id].dataType.simpleString()
-        return spark.createDataFrame(
-            [], f"{query_id} {qid_t}, {corpus_id} {cid_t}, sim double"
-        )
-    qmat = np.array([[float(v) for v in r[query_emb]] for r in q_rows])
-    nqs = np.zeros(len(q_rows))
-    for i in range(qmat.shape[1]):  # ascending-dim fold ≡ l2_norm's
-        nqs += qmat[:, i] * qmat[:, i]
-    nqs = np.sqrt(nqs)
-
-    nq = len(q_rows)
-
-    def score(batches):
-        # Emit the (cid, qidx, sim) stream FLAT via repeat/tile/ravel —
-        # all scalar numpy columns on the Arrow fast path. The first cut
-        # returned one array<double> of sims per corpus row and
-        # posexploded it JVM-side; the object-dtype list column fell off
-        # Arrow's vectorized conversion and cost more than the HOF fold
-        # it replaced (measured: the whole audit 1.5-2× SLOWER at 8
-        # cores). Flattening in numpy is pure memory movement.
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            emb = np.array(pdf["__emb"].tolist(), dtype=np.float64)
-            s = np.zeros((n, nq))
-            nc = np.zeros(n)
-            for i in range(emb.shape[1]):  # in-order fold: bit-parity
-                nc += emb[:, i] * emb[:, i]
-                s += emb[:, [i]] * qmat[:, i][None, :]
-            s /= nqs[None, :] * np.sqrt(nc)[:, None]
-            yield pd.DataFrame(
-                {
-                    "__cid": np.repeat(pdf["__cid"].to_numpy(), nq),
-                    "__qidx": np.tile(np.arange(nq, dtype=np.int64), n),
-                    "__raw": s.ravel(),
-                }
-            )
-
-    spark = queries.sparkSession
-    qmeta = spark.createDataFrame(
-        [(i, r[query_id]) for i, r in enumerate(q_rows)],
-        ["__qidx", query_id],
-    )
-    cid_type = corpus.schema[corpus_id].dataType.simpleString()
-    # Geometry guard (ADVICE r15): a null or wrong-dim corpus embedding
-    # would crash numpy's stack with an opaque worker error; production
-    # callers pre-filter (``_pq_corpus``/``_sq_corpus``/``bq_valid``) so
-    # this predicate is a no-op there, and for external callers it
-    # matches the HOF path wherever >= k valid rows exist per query
-    # (HOF yields null sims that sort last; the kernel never ranks them).
-    kernel_out = corpus.filter(
-        F.col(corpus_emb).isNotNull()
-        & (F.size(corpus_emb) == int(qmat.shape[1]))
-    ).select(
-        F.col(corpus_id).alias("__cid"), F.col(corpus_emb).alias("__emb")
-    ).mapInPandas(
-        score, f"__cid {cid_type}, __qidx long, __raw double"
-    )
-    return kernel_out.join(F.broadcast(qmeta), "__qidx").select(
-        F.col(query_id),
-        F.col("__cid").alias(corpus_id),
-        F.round("__raw", SIM_ROUND).alias("sim"),
-    )
+def _geometry_ok(corpus_emb: str, dim) -> F.Column:
+    """The corpus rows ``cosine_top_k`` ranks, on both scoring paths: a
+    non-null embedding of the query's dimension. Any other row has no
+    cosine — the kernel could not stack it, and the HOF fold would score
+    it null and rank it last — so both paths drop it, and a corpus with
+    fewer than k valid rows yields fewer than k ranks either way."""
+    return F.col(corpus_emb).isNotNull() & (F.size(corpus_emb) == dim)
 
 
 def cosine_top_k(
@@ -149,16 +66,19 @@ def cosine_top_k(
 
     ``use_kernel`` (OPTIMIZATION r15, guide §4.2): score the |Q|×|C|
     stream with the Arrow numpy kernel instead of the interpreted HOF
-    fold — bit-identical sims (``_kernel_sim_stream``), rank phases
-    unchanged. ``None`` = observed-size auto switch (one count job):
-    the kernel engages at ``KERNEL_CORPUS_THRESHOLD``, the same
-    measured crossover as ``retrieval_rank_metrics`` — BELOW it the
-    interpreted fold spread across the cores beats the kernel's fixed
-    costs (queries collect + Arrow worker transfer; measured at sf0.1 ×
-    8 cores: forcing the kernel is ~10% SLOWER per audit key), ABOVE it
-    the per-pair fold dominates and the kernel wins (5× at the 100×
-    probe). ``False`` (default) keeps the zero-overhead HOF path for
-    small callers (q24's 5-query set) with no count job."""
+    fold — bit-identical sims (``scoring.score_bulk`` with the
+    ascending-dim cosine fold; queries collected under
+    ``MAX_QUERY_ROWS``), rank phases unchanged. Both paths score one row
+    per query id and only corpus rows passing ``_geometry_ok``.
+    ``None`` = observed-size auto switch (one count job): the kernel
+    engages at ``KERNEL_CORPUS_THRESHOLD``, the same measured crossover
+    as ``retrieval_rank_metrics`` — BELOW it the interpreted fold spread
+    across the cores beats the kernel's fixed costs (queries collect +
+    Arrow worker transfer; measured at sf0.1 × 8 cores: forcing the
+    kernel is ~10% SLOWER per audit key), ABOVE it the per-pair fold
+    dominates and the kernel wins (5× at the 100× probe). ``False``
+    (default) keeps the zero-overhead HOF path for small callers (q24's
+    5-query set) with no count job."""
     if use_kernel is None:
         # ">" (not ">=") — the same comparison retrieval_rank_metrics
         # uses, so the two switches flip at the identical corpus size
@@ -169,26 +89,27 @@ def cosine_top_k(
     # Spread the corpus before the broadcast cross join: a compact scan can
     # arrive as one partition, which would serialize |Q|×|C| scoring work.
     nparts = corpus.sparkSession.sparkContext.defaultParallelism
+    corpus = corpus.repartition(nparts)
     if use_kernel:
-        scored = _kernel_sim_stream(
-            queries,
-            corpus.repartition(nparts),
-            query_id,
-            corpus_id,
-            query_emb,
-            corpus_emb,
+        scored = score_bulk(
+            queries, corpus, cosine_pairs(corpus_emb), "sim", [corpus_emb],
+            query_id, query_emb, corpus_id,
+            where=lambda dim: _geometry_ok(corpus_emb, dim),
         )
     else:
-        corpus = _with_norm(corpus, corpus_emb, "__nc").repartition(nparts)
-        queries = _with_norm(queries, query_emb, "__nq")
-        scored = corpus.crossJoin(F.broadcast(queries)).select(
-            F.col(query_id),
-            F.col(corpus_id),
-            F.round(
-                dot(F.col(query_emb), F.col(corpus_emb))
-                / (F.col("__nq") * F.col("__nc")),
-                SIM_ROUND,
-            ).alias("sim"),
+        scored = (
+            _with_norm(corpus, corpus_emb, "__nc")
+            .crossJoin(F.broadcast(query_frame(queries, query_id, query_emb)))
+            .filter(_geometry_ok(corpus_emb, F.size("__qe")))
+            .select(
+                F.col(query_id),
+                F.col(corpus_id),
+                F.round(
+                    dot(F.col("__qe"), F.col(corpus_emb))
+                    / (F.col("__nq") * F.col("__nc")),
+                    SIM_ROUND,
+                ).alias("sim"),
+            )
         )
     order = [F.col("sim").desc(), F.col(corpus_id).asc()]
     # Phase 1: local top-k within salt buckets (map-side pruning of the
@@ -209,37 +130,6 @@ def cosine_top_k(
         .filter(F.col("rank") <= k)
         .select(query_id, corpus_id, "rank", "sim")
     )
-
-
-def rank_all(
-    queries: DataFrame,
-    corpus: DataFrame,
-    query_id: str = "query_id",
-    corpus_id: str = "vec_id",
-    query_emb: str = "query_emb",
-    corpus_emb: str = "embedding",
-    extra_corpus_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Rank the *entire* corpus per query (reference semantics: k = corpus
-    size). One global window per query — reserved for evaluation workloads
-    where the full ranking is genuinely required."""
-    corpus = _with_norm(corpus, corpus_emb, "__nc").repartition(
-        corpus.sparkSession.sparkContext.defaultParallelism
-    )
-    queries = _with_norm(queries, query_emb, "__nq")
-    scored = corpus.crossJoin(F.broadcast(queries)).select(
-        F.col(query_id),
-        F.col(corpus_id),
-        *[F.col(c) for c in extra_corpus_cols],
-        F.round(
-            dot(F.col(query_emb), F.col(corpus_emb)) / (F.col("__nq") * F.col("__nc")),
-            SIM_ROUND,
-        ).alias("sim"),
-    )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("sim").desc(), F.col(corpus_id).asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w))
 
 
 SIM_BUCKETS = 1024  # coarse sim partitioning for the distributed rank

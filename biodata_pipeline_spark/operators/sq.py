@@ -43,8 +43,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from biodata_pipeline_spark.functions.vector import dot, l2_norm
-from biodata_pipeline_spark.operators.similarity import SIM_ROUND
+from biodata_pipeline_spark.operators.scoring import (
+    column_matrix,
+    cos_sim,
+    encode_rows,
+    exact_rerank,
+    exact_sim,
+    finite_vectors,
+    fold_pairs,
+    fold_rows,
+    has_non_finite,
+    query_frame,
+    ranked,
+    score_bulk,
+)
 
 SQ_LEVELS = 256  # 8-bit codes
 
@@ -57,18 +69,7 @@ def sq_valid(df: DataFrame, emb_col: str = "embedding", dim: int = 64):
     THIS one universe, mirroring ``bq_valid``, so a corpus with planted
     NaN/Inf rows cannot silently diverge the fit bounds between
     engines)."""
-    emb = F.col(emb_col).cast("array<double>")
-    defective = F.exists(
-        emb,
-        lambda x: x.isNull()
-        | F.isnan(x)
-        | (F.abs(x) == F.lit(float("inf"))),
-    )
-    return df.filter(
-        F.col(emb_col).isNotNull()
-        & (F.size(emb_col) == dim)
-        & ~defective
-    )
+    return finite_vectors(df, emb_col, dim)
 
 
 def sq_fit(
@@ -160,14 +161,8 @@ def sq_encode(
         )
         .cast("int"),
     )
-    defective = F.exists(
-        emb,
-        lambda x: x.isNull()
-        | F.isnan(x)
-        | (F.abs(x) == F.lit(float("inf"))),
-    )
     return base.withColumn(
-        codes_col, F.when(defective, F.lit(None)).otherwise(codes)
+        codes_col, F.when(has_non_finite(emb), F.lit(None)).otherwise(codes)
     )
 
 
@@ -187,47 +182,23 @@ def sq_encode_kernel(
     (null / NaN / Inf element) get NULL codes; degenerate dims code 0.
     Carries all input columns; adds ``codes_col``."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import ArrayType, IntegerType, StructField
-    from pyspark.sql.types import StructType
+    from pyspark.sql.types import IntegerType
 
-    dim = len(bounds["vmin"])
     mn = np.array(bounds["vmin"], dtype=np.float64)
     rg = np.array(
         [hi - lo for lo, hi in zip(bounds["vmin"], bounds["vmax"])],
         dtype=np.float64,
     )
     nz = rg != 0.0
-    base = df.filter(
-        F.col(emb_col).isNotNull() & (F.size(emb_col) == dim)
-    )
-    out_schema = StructType(
-        list(base.schema.fields)
-        + [StructField(codes_col, ArrayType(IntegerType()))]
-    )
-    emb_name = emb_col
 
-    def kern(it):
-        for pdf in it:
-            res = pdf.copy()
-            if not len(pdf):
-                res[codes_col] = pd.Series([], dtype="object")
-                yield res
-                continue
-            mat = np.array(pdf[emb_name].tolist(), dtype=np.float64)
-            finite = np.isfinite(mat).all(axis=1)  # None->NaN on convert
-            codes = np.zeros(mat.shape, dtype=np.int64)
-            with np.errstate(invalid="ignore"):
-                scaled = np.floor((mat - mn) * 256.0 / np.where(nz, rg, 1.0))
-            codes[:, nz] = np.clip(scaled[:, nz], 0, 255).astype(np.int64)
-            out = [
-                [int(c) for c in codes[r]] if finite[r] else None
-                for r in range(mat.shape[0])
-            ]
-            res[codes_col] = pd.Series(out, dtype="object", index=pdf.index)
-            yield res
+    def encode(mat, pdf):
+        codes = np.zeros(mat.shape, dtype=np.int64)
+        with np.errstate(invalid="ignore"):
+            scaled = np.floor((mat - mn) * 256.0 / np.where(nz, rg, 1.0))
+        codes[:, nz] = np.clip(scaled[:, nz], 0, 255).astype(np.int64)
+        return codes, np.isfinite(mat).all(axis=1)  # None->NaN on convert
 
-    return base.mapInPandas(kern, out_schema)
+    return encode_rows(df, emb_col, len(mn), codes_col, IntegerType(), encode)
 
 
 def sq_decode(
@@ -245,6 +216,19 @@ def sq_decode(
     return F.zip_with(stepped, mnlit, lambda t, mn: mn + t)
 
 
+def _decoder(bounds: dict):
+    """numpy twin of ``sq_decode``: the identical float64 affine map
+    ``mn + (c + ½)·rg/256`` (same ops, same operands — deterministic)."""
+    import numpy as np
+
+    mn = np.array(bounds["vmin"], dtype=np.float64)
+    rg = np.array(
+        [hi - lo for lo, hi in zip(bounds["vmin"], bounds["vmax"])],
+        dtype=np.float64,
+    )
+    return lambda cd: mn + (cd + 0.5) * rg / 256.0
+
+
 def sq_scores_kernel(
     queries: DataFrame,
     codes: DataFrame,
@@ -255,90 +239,41 @@ def sq_scores_kernel(
     codes_col: str = "sq_codes",
 ) -> DataFrame:
     """Arrow twin of the declarative reconstruction-cosine scorer — the
-    bulk path (the JVM ``aggregate`` fold is interpreted per row; the
-    ``pq_adc_scores_kernel`` discipline). Per batch: decode the byte
-    codes with the identical float64 affine map ``mn + (c + ½)·rg/256``
-    (same ops, same operands — deterministic), then accumulate dot and
-    reconstruction norm dimension-by-dimension in ASCENDING order, the
-    exact IEEE-754 sequence the JVM fold evaluates — sims bit-equal by
-    construction; SIM_ROUND rounding stays JVM-side (numpy rounds
-    half-even, Spark half-up). Query rows are collected driver-side
-    (bounded by the caller's query batch) and ship with the closure.
+    bulk path on the ``score_bulk`` harness (the JVM ``aggregate`` fold
+    is interpreted per row). Per batch: decode the byte codes
+    (``_decoder``), then accumulate dot and reconstruction norm
+    dimension-by-dimension in ASCENDING order, the exact IEEE-754
+    sequence the JVM fold evaluates — sims bit-equal by construction.
     Returns (query_id, id, sim_sq)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
+    decode = _decoder(bounds)
 
-    mn = np.array(bounds["vmin"], dtype=np.float64)
-    rg = np.array(
-        [hi - lo for lo, hi in zip(bounds["vmin"], bounds["vmax"])],
-        dtype=np.float64,
-    )
-    dim = len(mn)
-    qrows = (
-        queries.select(
-            F.col(query_id),
-            F.col(query_emb).cast("array<double>").alias("__qe"),
-            l2_norm(F.col(query_emb)).alias("__nq"),
-        )
-        .dropDuplicates([query_id])
-        .collect()
-    )
-    qids = [r[query_id] for r in qrows]
-    qmat = np.array([r["__qe"] for r in qrows], dtype=np.float64)
-    qnrm = np.array([r["__nq"] for r in qrows], dtype=np.float64)
-    nq = len(qids)
+    def fold_for(qmat, qnrm):
+        def fold(pdf):
+            recon = decode(column_matrix(pdf, codes_col))
+            s, cn = fold_pairs(qmat, recon)
+            return cos_sim(s, cn, qnrm[:, None])
 
-    in_fields = {f.name: f for f in codes.schema.fields}
-    qf = queries.schema[query_id]
-    out_schema = StructType(
-        [
-            StructField(query_id, qf.dataType),
-            in_fields[id_col],
-            StructField("__sim_raw", DoubleType()),
-        ]
+        return fold
+
+    return score_bulk(
+        queries, codes.filter(F.col(codes_col).isNotNull()), fold_for,
+        "sim_sq", [codes_col], query_id, query_emb, id_col,
     )
 
-    def score(it):
-        for pdf in it:
-            n = len(pdf)
-            if not n or not nq:
-                yield pd.DataFrame(
-                    {
-                        query_id: pd.Series([], dtype="object"),
-                        id_col: pd.Series([], dtype=pdf[id_col].dtype),
-                        "__sim_raw": pd.Series([], dtype="float64"),
-                    }
-                )
-                continue
-            cd = np.array(pdf[codes_col].tolist(), dtype=np.float64)
-            recon = mn + (cd + 0.5) * rg / 256.0  # the decode, exactly
-            s = np.zeros((nq, n))
-            cn = np.zeros(n)
-            for i in range(dim):  # ascending-dim: JVM bit-parity
-                if nq:
-                    s += qmat[:, i][:, None] * recon[:, i][None, :]
-                cn += recon[:, i] * recon[:, i]
-            sim = s / (qnrm[:, None] * np.sqrt(cn)[None, :])
-            ids = pdf[id_col].to_numpy()
-            yield pd.DataFrame(
-                {
-                    query_id: np.repeat(qids, n),
-                    id_col: np.tile(ids, nq),
-                    "__sim_raw": sim.ravel(),
-                }
-            )
 
-    return (
-        codes.filter(F.col(codes_col).isNotNull())
-        .select(id_col, codes_col)
-        .mapInPandas(score, out_schema)
-        .select(
-            query_id,
-            id_col,
-            F.round(F.col("__sim_raw"), SIM_ROUND).alias("sim_sq"),
-        )
-    )
+def sq_rows(bounds: dict, codes_col: str = "codes"):
+    """``score_rows`` fold for (query, candidate-codes) rows, the byte
+    probe's scorer: the ``_decoder`` reconstruction, then the exact
+    query side's ascending-dim cosine fold. Rows carry ``__qe``,
+    ``__nq`` and ``codes_col``."""
+    decode = _decoder(bounds)
+
+    def fold(pdf):
+        recon = decode(column_matrix(pdf, codes_col))
+        s, n2 = fold_rows(column_matrix(pdf, "__qe"), recon)
+        return cos_sim(s, n2, pdf["__nq"].to_numpy())
+
+    return fold
 
 
 def sq_topk(
@@ -363,13 +298,8 @@ def sq_topk(
     ``pq_adc_topk``, rarely needed at 8 bits/dim (the audit query
     measures exactly how rarely). sim is the reconstruction cosine
     when unrefined, the exact cosine when refined."""
-    from pyspark.sql import Window
-
-    q = queries.select(
-        F.col(query_id),
-        F.col(query_emb).cast("array<double>").alias("__qe"),
-        l2_norm(F.col(query_emb)).alias("__nq"),
-    ).dropDuplicates([query_id])
+    if refine and vectors is None:
+        raise ValueError("sq_topk: refine>0 requires vectors")
     if use_kernel:
         scored = sq_scores_kernel(
             queries, codes, bounds,
@@ -380,49 +310,14 @@ def sq_topk(
         c = codes.filter(F.col(codes_col).isNotNull()).select(
             F.col(id_col), sq_decode(codes_col, bounds).alias("__recon")
         )
-        scored = q.crossJoin(c).select(
-            query_id,
-            id_col,
-            F.round(
-                dot(F.col("__qe"), F.col("__recon"))
-                / (F.col("__nq") * l2_norm(F.col("__recon"))),
-                SIM_ROUND,
-            ).alias("sim_sq"),
-        )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("sim_sq").desc(), F.col(id_col)
-    )
+        scored = query_frame(queries, query_id, query_emb).crossJoin(
+            c
+        ).select(query_id, id_col, exact_sim("__recon", "sim_sq"))
     if not refine:
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(query_id, id_col, "rank", F.col("sim_sq").alias("sim"))
-        )
-    if vectors is None:
-        raise ValueError("sq_topk: refine>0 requires vectors")
-    cand = (
-        scored.withColumn("__srk", F.row_number().over(w))
-        .filter(F.col("__srk") <= refine * k)
-        .select(query_id, id_col)
-    )
-    exact = (
-        cand.join(vectors.select(id_col, emb_col), id_col)
-        .join(q, query_id)
-        .select(
-            query_id,
-            id_col,
-            F.round(
-                dot(F.col("__qe"), F.col(emb_col))
-                / (F.col("__nq") * l2_norm(F.col(emb_col))),
-                SIM_ROUND,
-            ).alias("sim"),
-        )
-    )
-    w2 = Window.partitionBy(query_id).orderBy(
-        F.col("sim").desc(), F.col(id_col)
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(query_id, id_col, "rank", "sim")
+        return ranked(
+            scored, k, "sim_sq", query_id, id_col
+        ).withColumnRenamed("sim_sq", "sim")
+    return exact_rerank(
+        ranked(scored, refine * k, "sim_sq", query_id, id_col),
+        queries, vectors, k, query_id, query_emb, id_col, emb_col,
     )
