@@ -23,11 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from biodata_pipeline_spark.functions.vector import dot, l2_norm
-from biodata_pipeline_spark.operators.scoring import (
-    cosine_pairs,
-    query_frame,
-    score_bulk,
-)
+from biodata_pipeline_spark.operators.scoring import cosine_pairs, score_bulk
 
 SIM_ROUND = 9  # ranking precision: collapses float64 ulp noise into ties
 
@@ -68,8 +64,8 @@ def cosine_top_k(
     stream with the Arrow numpy kernel instead of the interpreted HOF
     fold — bit-identical sims (``scoring.score_bulk`` with the
     ascending-dim cosine fold; queries collected under
-    ``MAX_QUERY_ROWS``), rank phases unchanged. Both paths score one row
-    per query id and only corpus rows passing ``_geometry_ok``.
+    ``MAX_QUERY_ROWS``, one row per query id), rank phases unchanged.
+    Both paths score only the corpus rows passing ``_geometry_ok``.
     ``None`` = observed-size auto switch (one count job): the kernel
     engages at ``KERNEL_CORPUS_THRESHOLD``, the same measured crossover
     as ``retrieval_rank_metrics`` — BELOW it the interpreted fold spread
@@ -99,13 +95,13 @@ def cosine_top_k(
     else:
         scored = (
             _with_norm(corpus, corpus_emb, "__nc")
-            .crossJoin(F.broadcast(query_frame(queries, query_id, query_emb)))
-            .filter(_geometry_ok(corpus_emb, F.size("__qe")))
+            .crossJoin(F.broadcast(_with_norm(queries, query_emb, "__nq")))
+            .filter(_geometry_ok(corpus_emb, F.size(query_emb)))
             .select(
                 F.col(query_id),
                 F.col(corpus_id),
                 F.round(
-                    dot(F.col("__qe"), F.col(corpus_emb))
+                    dot(F.col(query_emb), F.col(corpus_emb))
                     / (F.col("__nq") * F.col("__nc")),
                     SIM_ROUND,
                 ).alias("sim"),
